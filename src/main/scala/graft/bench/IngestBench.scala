@@ -49,10 +49,8 @@ object IngestBench {
 
     val t1 = System.nanoTime()
     graft.promql.Engine.withSeriesSig(samples)
-      .withColumn("metric", element_at(col("labels"), "__name__"))
-      .withColumn("block",
-        (col("t") / graft.streaming.Ingest.blockMs).cast("long") *
-          graft.streaming.Ingest.blockMs)
+      .withColumn("metric", graft.streaming.Ingest.metricCol)
+      .withColumn("block", graft.streaming.Ingest.blockCol())
       .write.mode("overwrite").partitionBy("block").parquet(outDir)
     val ingestSec = (System.nanoTime() - t1) / 1e9
     (numMetrics.toLong * numScrapes, planSec, ingestSec)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.promql.Engine
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -27,6 +27,13 @@ object Ingest {
   /** 2h time bucket, the reference's block duration */
   val blockMs: Long = 2 * 3600 * 1000L
 
+  /** the sink's `block` partition value of a sample: the start of its
+    * `width`-wide time bucket */
+  def blockCol(width: Long = blockMs): Column = (col("t") / width).cast("long") * width
+
+  /** the sink's flat `metric` column */
+  def metricCol: Column = element_at(col("labels"), "__name__")
+
   /** exposition text file stream → relabeled samples stream */
   def source(spark: SparkSession, dir: String, rules: Seq[Relabel.Rule] = Nil): DataFrame = {
     val lines = spark.readStream.text(dir)
@@ -40,10 +47,10 @@ object Ingest {
   def sink(samples: DataFrame, outDir: String, checkpointDir: String,
       oooWindowMs: Long = 10 * 60 * 1000L): StreamingQuery =
     Engine.withSeriesSig(samples)
-      .withColumn("metric", element_at(col("labels"), "__name__"))
+      .withColumn("metric", metricCol)
       .withColumn("ts", timestamp_millis(col("t")))
       .withWatermark("ts", s"$oooWindowMs milliseconds")
-      .withColumn("block", (col("t") / blockMs).cast("long") * blockMs)
+      .withColumn("block", blockCol())
       .drop("ts")
       .writeStream
       .format("parquet")

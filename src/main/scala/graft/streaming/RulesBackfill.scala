@@ -98,8 +98,8 @@ object RulesBackfill {
         try {
           val out = evalRule(spark, samples, r, g, startMs, endMs)
           Engine.withSeriesSig(out)
-            .withColumn("metric", element_at(col("labels"), "__name__"))
-            .withColumn("block", (col("t") / blockMs).cast("long") * blockMs)
+            .withColumn("metric", Ingest.metricCol)
+            .withColumn("block", Ingest.blockCol(blockMs))
             .write.mode("append").partitionBy("block").parquet(outDir)
         } catch {
           case e: Exception => errs += s"${g.name}/${r.record}: ${e.getMessage}"

@@ -5,6 +5,8 @@ import graft.web.SampleStore
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Pull-model scrape manager: HTTP-poll a target set on an interval, parse
   * the exposition body (Prometheus text or OpenMetrics), apply relabeling,
   * attach `instance`/`job`, synthesize the per-scrape report series
@@ -420,9 +422,7 @@ final class ScrapeManager(
           ("scrape_samples_post_metric_relabeling", 0.0)).map { case (n, v) =>
           Row(ScrapeManager.decorate(tgt, Map("__name__" -> n)), t0, v, false, null, 0L) }
       }
-      if (rows.nonEmpty)
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), Engine.samplesSchema))
+      store.append(rows)
       return rows.size.toLong
     }
     // prune series caches of departed targets — SD churn must not grow
@@ -438,9 +438,7 @@ final class ScrapeManager(
         seriesSeen.getOrElse(k, Map.empty).valuesIterator.collect {
           case (l, explicit) if !explicit || trackTimestampsStaleness => l
         }).map(l => Row(l, tMark, Double.NaN, true, null, 0L))
-      if (rows.nonEmpty)
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), Engine.samplesSchema))
+      store.append(rows)
       departed.foreach(seriesSeen.remove)
     }
     stSynthState.keys.filterNot(liveKeys).foreach(stSynthState.remove)
@@ -571,14 +569,14 @@ final class ScrapeManager(
     val df0 = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, math.max(1, rows.size / 10000)),
       Engine.samplesSchema)
-    val scraped = if (rows.isEmpty) None else Some(Relabel(df0, metricRelabel))
     // limits run on the POST-metric-relabel label sets (ref: append-time
     // verifyLabelLimits — a relabel rule that drops the offending label must
-    // let the scrape pass); one collect replaces the former count (the batch
-    // is driver-origin and ≤ scrape size)
-    val postPairs = scraped.map(_.select("labels", "t").collect()
-      .map(r => (r.getAs[scala.collection.Map[String, String]](0).toMap,
-        r.getLong(1) != t0))).getOrElse(Array.empty)
+    // let the scrape pass); the relabeled batch is materialized once, for
+    // the limits and the append alike (it is driver-origin and ≤ scrape size)
+    val scraped =
+      if (rows.isEmpty) Seq.empty[Row] else SampleStore.rows(Relabel(df0, metricRelabel))
+    val postPairs = scraped.map(r =>
+      (r.getAs[scala.collection.Map[String, String]](0).toMap, r.getLong(1) != t0))
     val postLabels = postPairs.map(_._1)
     val postN = postLabels.length.toLong
     val violation = if (!ok) None else limitViolation(postLabels.iterator, postN)
@@ -603,10 +601,7 @@ final class ScrapeManager(
       Row(decorate(Map("__name__" -> n)), t0, v, false, null, 0L)
     }
     val markerRows = staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L))
-    val reportDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(report ++ markerRows, 1), Engine.samplesSchema)
-    store.append(scraped.filter(_ => violation.isEmpty)
-      .map(_.unionByName(reportDf)).getOrElse(reportDf))
+    store.append((if (violation.isEmpty) scraped else Nil) ++ report ++ markerRows)
     if (parsed.meta.nonEmpty && violation.isEmpty) store.mergeMetadata(parsed.meta)
     // exemplars ride the accepted scrape only, attached to the decorated,
     // POST-metric-relabel series (same contract as the OpenMetrics path);
@@ -775,27 +770,16 @@ final class ScrapeManager(
     val stampedZeros = stZeros.map { case (l, ct, v) => (decorate(l), ct, v, 0L) }
     val stamped = stampedReal ++ stampedZeros
     // metric_relabel_configs apply to scraped samples only; the report
-    // series bypass them (ref: scrape.go append vs report)
-    val scrapedReal =
-      if (stampedReal.isEmpty) None
-      else Some(Relabel(toDf(stampedReal), metricRelabel))
-    val zerosDf =
-      if (stampedZeros.isEmpty) None
-      else Some(Relabel(toDf(stampedZeros), metricRelabel))
-    val scraped0 = (scrapedReal, zerosDf) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-    val scraped =
-      if (tgt.convertNhcbOverride.getOrElse(convertNhcb))
-        scraped0.map(Ingest.classicToNhcb)
-      else scraped0
+    // series bypass them (ref: scrape.go append vs report). Each relabeled
+    // batch is materialized once, for the limits and the append alike.
+    def relabeled(rows: Seq[(Map[String, String], Long, Double, Long)]): Seq[Row] =
+      if (rows.isEmpty) Nil else SampleStore.rows(Relabel(toDf(rows), metricRelabel))
+    val scrapedReal = relabeled(stampedReal)
     // post-relabel label sets (see scrapeProto: append-time
-    // verifyLabelLimits); limits count the SCRAPED series — synthesized
-    // NHCB natives don't count against sample_limit
-    val postPairs = scrapedReal.map(_.select("labels", "t").collect()
-      .map(r => (r.getAs[scala.collection.Map[String, String]](0).toMap,
-        r.getLong(1) != t0))).getOrElse(Array.empty)
+    // verifyLabelLimits); limits count the SCRAPED series — ST zeros and
+    // synthesized NHCB natives don't count against sample_limit
+    val postPairs = scrapedReal.map(r =>
+      (r.getAs[scala.collection.Map[String, String]](0).toMap, r.getLong(1) != t0))
     val postLabels = postPairs.map(_._1)
     val postN = postLabels.length.toLong
     val violation = if (!ok) None else limitViolation(postLabels.iterator, postN)
@@ -824,17 +808,17 @@ final class ScrapeManager(
         ("scrape_body_size_bytes", bodyLen.toDouble)) else Nil))
       .map { case (n, v) => (decorate(Map("__name__" -> n)), t0, v, 0L) }
     // a violated limit drops the WHOLE scraped batch (append rollback)
-    val batch0 = scraped.filter(_ => violation.isEmpty) match {
-      case Some(df) => df.unionByName(toDf(report))
-      case None => toDf(report)
-    }
-    val batch =
-      if (staleLabels.isEmpty) batch0
-      else batch0.unionByName(spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L)), 1),
-        Engine.samplesSchema))
-    store.append(batch)
+    val scraped =
+      if (violation.nonEmpty) Nil
+      else {
+        val all = scrapedReal ++ relabeled(stampedZeros)
+        if (all.isEmpty || !tgt.convertNhcbOverride.getOrElse(convertNhcb)) all
+        else SampleStore.rows(Ingest.classicToNhcb(
+          spark.createDataFrame(all.asJava, Engine.samplesSchema)))
+      }
+    store.append(scraped ++
+      report.map { case (l, t, v, stt) => Row(l, t, v, false, null, stt) } ++
+      staleLabels.map(l => Row(l, t0, Double.NaN, true, null, 0L)))
     // exemplars ride the accepted scrape only, attached to the decorated,
     // POST-metric-relabel series — an exemplar of a relabel-dropped series
     // is dropped with it (ref: scrape.go exemplars append after the sample's

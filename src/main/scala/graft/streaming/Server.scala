@@ -1,7 +1,10 @@
 package graft.streaming
 
 import graft.promql.{Engine, QueryLimits}
+import graft.web.SampleStore
 import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
 
 /** Whole-server assembly (ref: cmd/prometheus/main.go component wiring +
   * web/web.go lifecycle): prometheus.yml → scrape manager + rule groups +
@@ -47,7 +50,7 @@ final class PromServer(
 
   private val emptyDf = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Engine.samplesSchema)
-  val store = new graft.web.SampleStore(spark, emptyDf)
+  val store = new SampleStore(spark, emptyDf)
   val api = new graft.web.HttpApi(spark, store, port, nowMs, limits, agentMode,
     webConfigFile, perStepStats)
   // console templates + external URL (ref: --web.console.templates /
@@ -352,26 +355,37 @@ final class PromServer(
       // ts - offset, trading recency for slow-ingest slack (ref:
       // rules/group.go Eval restoreStartTime/queryOffset)
       val ets = tsMs - g.queryOffsetMs
+      // a rule whose evaluation fails goes unhealthy; the tick goes on
+      def evaluated[T](rule: String)(body: => T): Option[T] =
+        try Some(body) catch { case e: Exception =>
+          api.ruleErrors = api.ruleErrors.updated((g.name, rule), String.valueOf(e.getMessage))
+          None
+        }
       Rules.recordingLevels(g.recording).foreach { level =>
         level.foreach { r =>
-          val out = Rules.evalRecording(spark, store.samples, r, ets)
-          // group limit: a recording rule producing more series than the
-          // group allows DROPS its output and goes unhealthy (ref:
-          // rules/group.go Eval "exceeded limit %d with %d series")
-          val n = if (g.limit > 0) out.count() else -1L
-          if (g.limit > 0 && n > g.limit) {
-            api.ruleErrors = api.ruleErrors.updated((g.name, r.record),
-              s"exceeded limit of ${g.limit} with $n series")
-          } else {
-            api.ruleErrors -= ((g.name, r.record))
-            store.append(out)
-            // a failing sink must not abort the evaluation tick: the
-            // reference's queue manager is async — send failures drop/retry
-            // on their own clock and never stall rule evaluation
-            forwarders.foreach { case (rules, f) =>
-              try f.forward(if (rules.isEmpty) out else Relabel(out, rules))
-              catch { case e: Exception =>
-                System.err.println(s"[remote-write] forward failed: ${e.getMessage}") }
+          // materialized once: the store and the forwarders hold the
+          // evaluated samples, not a plan over an older store snapshot
+          // (ref: rules/group.go Eval appends the evaluated vector)
+          evaluated(r.record)(
+            SampleStore.rows(Rules.evalRecording(spark, store.samples, r, ets))).foreach { rows =>
+            // group limit: a recording rule producing more series than the
+            // group allows DROPS its output and goes unhealthy (ref:
+            // rules/group.go Eval "exceeded limit %d with %d series")
+            if (g.limit > 0 && rows.size > g.limit) {
+              api.ruleErrors = api.ruleErrors.updated((g.name, r.record),
+                s"exceeded limit of ${g.limit} with ${rows.size} series")
+            } else {
+              api.ruleErrors -= ((g.name, r.record))
+              store.append(rows)
+              lazy val out = spark.createDataFrame(rows.asJava, Engine.samplesSchema)
+              // a failing sink must not abort the evaluation tick: the
+              // reference's queue manager is async — send failures drop/retry
+              // on their own clock and never stall rule evaluation
+              forwarders.foreach { case (rules, f) =>
+                try f.forward(if (rules.isEmpty) out else Relabel(out, rules))
+                catch { case e: Exception =>
+                  System.err.println(s"[remote-write] forward failed: ${e.getMessage}") }
+              }
             }
           }
         }
@@ -380,18 +394,22 @@ final class PromServer(
         val prevAll = alertStates.getOrElse(g.name, Map.empty)
         val prev = prevAll.filter(
           _._2.labels.getOrElse("alertname", "") == a.alert)
-        val (df, next) = Rules.evalAlerting(spark, store.samples, a, ets, prev,
-          externalLabels = configOpt.map(_.externalLabels).getOrElse(Map.empty))
-        if (g.limit > 0 && next.size > g.limit) {
-          api.ruleErrors = api.ruleErrors.updated((g.name, a.alert),
-            s"exceeded limit of ${g.limit} with ${next.size} alerts")
-        } else {
-          api.ruleErrors -= ((g.name, a.alert))
-          store.append(df)
-          val others = prevAll -- prev.keys
-          alertStates = alertStates.updated(g.name, others ++ next)
-          api.alertState = alertStates
-          notifier.foreach(_.sendFromState(a, next, ets))
+        evaluated(a.alert) {
+          val (df, next) = Rules.evalAlerting(spark, store.samples, a, ets, prev,
+            externalLabels = configOpt.map(_.externalLabels).getOrElse(Map.empty))
+          (SampleStore.rows(df), next)
+        }.foreach { case (rows, next) =>
+          if (g.limit > 0 && next.size > g.limit) {
+            api.ruleErrors = api.ruleErrors.updated((g.name, a.alert),
+              s"exceeded limit of ${g.limit} with ${next.size} alerts")
+          } else {
+            api.ruleErrors -= ((g.name, a.alert))
+            store.append(rows)
+            val others = prevAll -- prev.keys
+            alertStates = alertStates.updated(g.name, others ++ next)
+            api.alertState = alertStates
+            notifier.foreach(_.sendFromState(a, next, ets))
+          }
         }
       }
       api.ruleEvalStats = api.ruleEvalStats

@@ -643,13 +643,8 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       val snappyOn = Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
         .forall(_.equalsIgnoreCase("snappy")) // PRW mandates snappy; absent ⇒ assume snappy
       val (samples, meta) = RemoteWrite.decodeFull(body, isV2, snappyOn)
-      if (samples.nonEmpty) {
-        val rows = samples.map(s =>
-          Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt))
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, math.max(1, samples.length / 10000)),
-          Engine.samplesSchema))
-      }
+      store.append(samples.map(s =>
+        Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt)))
       if (meta.nonEmpty) store.mergeMetadata(meta)
       ex.sendResponseHeaders(204, -1)
     })
@@ -790,7 +785,16 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         ("prometheus_engine_query_samples_read_total",
           "Total count of samples read by queries.",
           "counter", Seq(Map.empty[String, String] ->
-            graft.promql.Engine.samplesReadTotal.get().toDouble)))
+            graft.promql.Engine.samplesReadTotal.get().toDouble)),
+        // ref: tsdb/head.go headMetrics — counters the store keeps on append
+        ("prometheus_tsdb_head_samples_appended_total",
+          "Total number of appended samples.", "counter", {
+            val (floats, hists) = store.samplesAppended
+            Seq(Map("type" -> "float") -> floats.toDouble,
+              Map("type" -> "histogram") -> hists.toDouble)
+          }),
+        ("prometheus_tsdb_head_series", "Total number of series in the head block.",
+          "gauge", Seq(Map.empty[String, String] -> store.headSeries.toDouble)))
     }
 
     server.createContext("/metrics", handler { ex =>
@@ -910,8 +914,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
       // ref: api.go:1961 serveTSDBBlocks — here a "block" is a 2h ingest
       // partition of the store; stats from one driver-scale aggregation
       val rows = store.samples
-        .groupBy(((col("t") / graft.streaming.Ingest.blockMs).cast("long") *
-          graft.streaming.Ingest.blockMs).as("block"))
+        .groupBy(graft.streaming.Ingest.blockCol().as("block"))
         .agg(count(lit(1)).as("numSamples"),
           // canonical entry-order-independent series identity (to_json on
           // the raw map would hash the same series differently per ingest
@@ -1397,13 +1400,8 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         .exists(_.contains("gzip"))
       val dec = Otlp.decode(ex.getRequestBody.readAllBytes(), gz, Some(otlpDelta),
         otlpCfg)
-      if (dec.samples.nonEmpty) {
-        val rows = dec.samples.map(s =>
-          Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt))
-        store.append(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, math.max(1, rows.length / 10000)),
-          Engine.samplesSchema))
-      }
+      store.append(dec.samples.map(s =>
+        Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt)))
       if (dec.metadata.nonEmpty) store.mergeMetadata(dec.metadata)
       if (dec.exemplars.nonEmpty) {
         // exemplar rows: (series labels, exemplar{labels, v, t}) — the same

@@ -781,4 +781,43 @@ class PromServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(bt.contains("\"scrapeTimeout\":\"7s\""), bt)
     } finally { srv.stop() }
   }
+
+  test("a rule failing at evaluation goes unhealthy; its group and the store carry on") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rulefail")
+    // up:bad maps both `up` series onto one labelset, which the engine
+    // rejects when the output is materialized
+    writeFile(dir, "rules.yml",
+      """groups:
+        |  - name: mixed
+        |    rules:
+        |      - record: up:bad
+        |        expr: label_replace(up, "job", "x", "", "")
+        |      - record: up:count
+        |        expr: count(up)
+        |""".stripMargin)
+    val cfgPath = writeFile(dir, "prometheus.yml",
+      """global:
+        |  scrape_interval: 15s
+        |rule_files:
+        |  - rules.yml
+        |""".stripMargin)
+    val srv = new PromServer(spark, cfgPath)
+    srv.start()
+    try {
+      val port = srv.api.boundPort
+      import org.apache.spark.sql.Row
+      srv.store.append(Seq(
+        Row(Map("__name__" -> "up", "job" -> "a"), 10000L, 1.0, false, null, 0L),
+        Row(Map("__name__" -> "up", "job" -> "b"), 10000L, 1.0, false, null, 0L)))
+      srv.evalRulesOnce(15000L)
+      val (cr, br) = get(port, "/api/v1/rules")
+      assert(cr == 200 && br.contains("\"health\":\"err\"") &&
+        br.contains("same labelset"), br)
+      // the failed output never reached the store: every read still works
+      val (cq, bq) = get(port, "/api/v1/query?query=up%3Acount&time=15")
+      assert(cq == 200 && bq.contains("\"2\""), bq)
+      val (cu, bu) = get(port, "/api/v1/query?query=count(%7B__name__%3D~%22.%2B%22%7D)&time=15")
+      assert(cu == 200 && bu.contains("\"3\""), bu)
+    } finally { srv.stop() }
+  }
 }

@@ -1962,4 +1962,35 @@ class ServingSpec extends AnyFunSuite {
       assert(streamed.map(_.samples.size).sum == 400)
     } finally api.stop()
   }
+
+  test("/metrics counts the samples and series remote write appended to the head") {
+    val api = new HttpApi(spark, emptyStore(), 0, () => 100000L)
+    api.start()
+    try {
+      val h = graft.promql.FHist(0, 0.0, 1.0, 3.0, 1.5, Seq(0), Seq(2.0), Nil, Nil, Nil, 0)
+      val writes = 3
+      (0 until writes).foreach { k =>
+        val body = RemoteWrite.encodeV2(Seq(
+          RemoteWrite.Sample(Map("__name__" -> "a", "i" -> "0"), k * 1000L, 1.0),
+          RemoteWrite.Sample(Map("__name__" -> "a", "i" -> "1"), k * 1000L, 2.0),
+          RemoteWrite.Sample(Map("__name__" -> "hh"), k * 1000L, 0.0, h = Some(h))))
+        val resp = client.send(
+          java.net.http.HttpRequest.newBuilder(
+            java.net.URI.create(s"http://127.0.0.1:${api.boundPort}/api/v1/write"))
+            .header("Content-Encoding", "snappy")
+            .header("Content-Type", "application/x-protobuf;proto=io.prometheus.write.v2.Request")
+            .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 204, resp.body())
+      }
+      val (c, b) = get(api.boundPort, "/metrics")
+      assert(c == 200)
+      assert(b.contains("# TYPE prometheus_tsdb_head_samples_appended_total counter\n"))
+      assert(b.contains(
+        s"prometheus_tsdb_head_samples_appended_total{type=\"float\"} ${2 * writes}\n"), b)
+      assert(b.contains(
+        s"prometheus_tsdb_head_samples_appended_total{type=\"histogram\"} $writes\n"), b)
+      assert(b.contains("prometheus_tsdb_head_series 3\n"), b)
+    } finally api.stop()
+  }
 }
