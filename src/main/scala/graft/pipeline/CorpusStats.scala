@@ -23,7 +23,7 @@ object CorpusStats {
     * frequency counting needs occurrence multiplicity (tight-loop UDF for the
     * same reason as Dedup.shingleUdf: the SQL-lambda transform evaluates
     * interpreted per position). */
-  private[pipeline] def gramUdf(n: Int) = udf { (w: Seq[String]) =>
+  private[pipeline] def gramUdf(n: Int) = udf { (w: Array[String]) =>
     if (w.length < n) Array.empty[String]
     else {
       val out = new Array[String](w.length - n + 1)

@@ -37,7 +37,7 @@ object Dedup {
   /** distinct word n-gram shingles — tight-loop UDF (the SQL-lambda
     * `transform(sequence(...), i -> concat_ws(element_at...))` version
     * evaluates interpreted, ~20µs/position; this is the per-doc hot loop) */
-  private def distinctShingles(w: Seq[String], n: Int): Array[String] =
+  private def distinctShingles(w: Array[String], n: Int): Array[String] =
     if (w.length < n) Array.empty[String]
     else {
       val seen = new java.util.LinkedHashSet[String]()
@@ -53,7 +53,7 @@ object Dedup {
       seen.toArray(out); out
     }
 
-  private def shingleUdf(n: Int) = udf { (w: Seq[String]) => distinctShingles(w, n) }
+  private def shingleUdf(n: Int) = udf { (w: Array[String]) => distinctShingles(w, n) }
 
   /** (doc_id, shingle) exploded pairs */
   private[graft] def shingleRows(docs: DataFrame, n: Int): DataFrame =
@@ -155,7 +155,7 @@ object Dedup {
     * bit-identical (spec-pinned against the old formula). Docs with no
     * shingles (< 3 words) or null text drop, exactly as the explode did. */
   def minhashSignatures(docs: DataFrame, perms: Int = 64): DataFrame = {
-    val sigUdf = udf { (w: Seq[String]) =>
+    val sigUdf = udf { (w: Array[String]) =>
       val shingles = distinctShingles(w, 3)
       if (shingles.isEmpty) null
       else {
@@ -233,7 +233,7 @@ object Dedup {
   }
 
   /** all ordered pairs (a(i), a(j)), i < j, of a sorted posting list */
-  private val pairsUdf = udf { (ds: Seq[Long]) =>
+  private val pairsUdf = udf { (ds: Array[Long]) =>
     val n = ds.length
     val out = new Array[(Long, Long)](n * (n - 1) / 2)
     var k = 0; var i = 0
@@ -248,7 +248,7 @@ object Dedup {
   /** matching-position fraction of two minhash signatures — primitive loop
     * (the SQL-lambda `size(filter(zip_with(...)))` evaluates interpreted
     * with per-element allocation on every candidate pair) */
-  private val estJaccardUdf = udf { (a: Seq[Int], b: Seq[Int]) =>
+  private val estJaccardUdf = udf { (a: Array[Int], b: Array[Int]) =>
     var m = 0; var i = 0; val n = a.length
     while (i < n) { if (a(i) == b(i)) m += 1; i += 1 }
     m.toDouble / n
@@ -520,7 +520,7 @@ object Dedup {
       maxLen: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wn = win; val dv = divisor; val ml = maxLen
-    val chunkUdf = udf { (w: Seq[String]) =>
+    val chunkUdf = udf { (w: Array[String]) =>
       val n = w.length
       val out = scala.collection.mutable.ArrayBuffer[String]()
       var start = 0

@@ -134,7 +134,7 @@ object QualityModel {
     }
 
     val w = wts
-    val scoreUdf = udf { (bks: Seq[Int], vs: Seq[Double]) =>
+    val scoreUdf = udf { (bks: Array[Int], vs: Array[Double]) =>
       var m = w(buckets)
       var i = 0
       while (i < bks.length) { m += w(bks(i)) * vs(i); i += 1 }

@@ -28,7 +28,7 @@ object Similarity {
     * against. The previous `aggregate(zip_with(...))` SQL-lambda version had
     * the same fold order but evaluated interpreted with per-element
     * allocation — the UDF is ~50× cheaper per row and identical in value. */
-  private val cosUdf = udf { (a: Seq[Float], b: Seq[Float]) =>
+  private val cosUdf = udf { (a: Array[Float], b: Array[Float]) =>
     var dq = 0.0; var dn = 0.0; var dd = 0.0
     var i = 0; val n = a.length
     while (i < n) {
@@ -73,7 +73,7 @@ object Similarity {
     * `planes` sign-of-projection bits. Returns Array(tables) of bucket ids.
     * Replaces tables×planes interpreted `aggregate(zip_with(hash(...)))`
     * lambdas (which also re-derived the hyperplane hash per row per element). */
-  private def bucketsUdf(tables: Int, planes: Int) = udf { (v: Seq[Float]) =>
+  private def bucketsUdf(tables: Int, planes: Int) = udf { (v: Array[Float]) =>
     val dim = v.length
     val h = hyperplanes(tables, planes, dim)
     val out = new Array[Long](tables)
@@ -125,7 +125,7 @@ object Similarity {
     * corpus is written bucketed by cell once and every query touches
     * nprobe/nlist of the data; recall < 1 by construction (rows-only check).
     */
-  private[pipeline] def nearestUdf(cs: Array[Array[Double]], n: Int) = udf { (v: Seq[Float]) =>
+  private[pipeline] def nearestUdf(cs: Array[Array[Double]], n: Int) = udf { (v: Array[Float]) =>
     val scored = cs.zipWithIndex.map { case (c, i) =>
       var d = 0.0; var j = 0
       while (j < c.length) { val x = v(j).toDouble - c(j); d += x * x; j += 1 }
@@ -286,7 +286,7 @@ object Similarity {
     var centroids: Array[Array[Float]] = src.orderBy(col("vec_id")).limit(k)
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray)
-    def assignUdf(cents: Array[Array[Float]]) = udf { (v: Seq[Float]) =>
+    def assignUdf(cents: Array[Array[Float]]) = udf { (v: Array[Float]) =>
       var best = 0; var bestD = Double.MaxValue
       var c = 0
       while (c < cents.length) {
@@ -412,7 +412,7 @@ object Similarity {
     * pairwise join anywhere. */
   def pqTopK(corpus: DataFrame, qdf: DataFrame, k: Int, m: Int = 4,
       ksub: Int = 16, iters: Int = 2): DataFrame = {
-    val normUdf = udf { (v: Seq[Float]) =>
+    val normUdf = udf { (v: Array[Float]) =>
       var s = 0.0; var i = 0
       while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
       val inv = if (s == 0) 0.0 else 1.0 / math.sqrt(s)
@@ -435,7 +435,7 @@ object Similarity {
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
     // all m codes in ONE pass over the vector (an m-way union would rescan)
-    def codesUdf(cbs: Array[Array[Array[Double]]]) = udf { (v: Seq[Float]) =>
+    def codesUdf(cbs: Array[Array[Array[Double]]]) = udf { (v: Array[Float]) =>
       Array.tabulate(m) { j =>
         val cb = cbs(j); var best = 0; var bestD = Double.MaxValue
         var c = 0

@@ -71,7 +71,7 @@ object Engine {
     * every native-histogram / start-timestamp leg (mixed-series censuses,
     * anti-joins, histogram branches) from plans over float-only stores — the
     * common case at 100 TB, where those legs would each re-scan the input. */
-  private[promql] val storeAbsentKey = "graft.store_absent"
+  private[graft] val storeAbsentKey = "graft.store_absent"
   private val storeAbsent: Metadata =
     new MetadataBuilder().putBoolean(storeAbsentKey, true).build()
 

@@ -644,7 +644,7 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
         .forall(_.equalsIgnoreCase("snappy")) // PRW mandates snappy; absent ⇒ assume snappy
       val (samples, meta) = RemoteWrite.decodeFull(body, isV2, snappyOn)
       store.append(samples.map(s =>
-        Row(s.labels, s.t, s.v, false, s.h.map(FHist.toRow).orNull, s.stt)))
+        Row(s.labels, s.t, s.v, RemoteWrite.isStaleMarker(s), s.h.map(FHist.toRow).orNull, s.stt)))
       if (meta.nonEmpty) store.mergeMetadata(meta)
       ex.sendResponseHeaders(204, -1)
     })
@@ -794,7 +794,11 @@ final class HttpApi(spark: SparkSession, store: SampleStore, port: Int = 0,
               Map("type" -> "histogram") -> hists.toDouble)
           }),
         ("prometheus_tsdb_head_series", "Total number of series in the head block.",
-          "gauge", Seq(Map.empty[String, String] -> store.headSeries.toDouble)))
+          "gauge", Seq(Map.empty[String, String] -> store.headSeries.toDouble)),
+        ("prometheus_tsdb_head_min_time", "Minimum time bound of the head block.",
+          "gauge", Seq(Map.empty[String, String] -> store.headTimeRange._1.toDouble)),
+        ("prometheus_tsdb_head_max_time", "Maximum timestamp of the head block.",
+          "gauge", Seq(Map.empty[String, String] -> store.headTimeRange._2.toDouble)))
     }
 
     server.createContext("/metrics", handler { ex =>

@@ -25,6 +25,14 @@ object RemoteWrite {
   final case class Sample(labels: Map[String, String], t: Long, v: Double,
       stt: Long = 0L, h: Option[FHist] = None)
 
+  /** the bits of the reference's StaleNaN (ref: model/value/value.go) */
+  val StaleNaNBits = 0x7ff0000000000002L
+
+  /** a staleness marker: a float sample whose value, or a histogram sample
+    * whose sum, is StaleNaN (ref: value.IsStaleNaN) */
+  def isStaleMarker(s: Sample): Boolean =
+    java.lang.Double.doubleToRawLongBits(s.h.fold(s.v)(_.sum)) == StaleNaNBits
+
   /** family → (type, unit, help), from PRW 2.0 per-series metadata */
   type Meta = Map[String, (String, String, String)]
 
@@ -317,7 +325,7 @@ object RemoteWrite {
       ss.foreach { s =>
         val so = new java.io.ByteArrayOutputStream()
         vint(so, (1 << 3) | 1)
-        val bits = java.lang.Double.doubleToLongBits(s.v)
+        val bits = java.lang.Double.doubleToRawLongBits(s.v)
         (0 until 8).foreach(i => so.write(((bits >> (8 * i)) & 0xff).toInt))
         vint(so, 2 << 3); vint(so, s.t)
         delim(tso, 2, so.toByteArray)
@@ -354,14 +362,14 @@ object RemoteWrite {
     }
     def f64(o: java.io.ByteArrayOutputStream, tag: Int, v: Double): Unit = {
       vint(o, (tag << 3) | 1)
-      val bits = java.lang.Double.doubleToLongBits(v)
+      val bits = java.lang.Double.doubleToRawLongBits(v)
       (0 until 8).foreach(i => o.write(((bits >> (8 * i)) & 0xff).toInt))
     }
     def packedF64(o: java.io.ByteArrayOutputStream, tag: Int, vs: Seq[Double]): Unit =
       if (vs.nonEmpty) {
         val p = new java.io.ByteArrayOutputStream()
         vs.foreach { v =>
-          val bits = java.lang.Double.doubleToLongBits(v)
+          val bits = java.lang.Double.doubleToRawLongBits(v)
           (0 until 8).foreach(i => p.write(((bits >> (8 * i)) & 0xff).toInt))
         }
         delim(o, tag, p.toByteArray)

@@ -4,33 +4,49 @@ import graft.promql.{Engine, LabelMatcher, MatchOp}
 import graft.streaming.Ingest
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Metadata
+
+import scala.collection.mutable
 
 /** Mutable sample store backing the serving layer (HTTP API, remote write,
   * OTLP, scrape, rule outputs, federation).
   *
   * The store is the frame it was opened with (the persisted blocks) plus a
-  * driver-resident HEAD: an immutable vector of the samples appended since,
-  * each held once as a row in [[Engine.samplesSchema]] — the analog of the
-  * reference's in-memory head (ref: tsdb/head.go:71 Head, tsdb/head.go:2735
-  * memSeries). An append adds its rows to the head and publishes the new
-  * snapshot before it returns, so a write is acked only once a read taken
-  * after it sees the batch. A read is the opened frame ∪ ONE relation over
-  * the current snapshot: an RDD of its rows with a fixed partition count,
-  * so the rows are converted in tasks and never enter the driver's
-  * optimizer as data. Its derived columns (`__sg`, `metric`, `block` —
-  * whichever the opened frame carries) come from the same Spark expressions
-  * as the block sink ([[graft.streaming.Ingest.sink]]). The read plan
-  * therefore has the same shape after one append or a thousand, and no
-  * periodic checkpoint is needed to bound it.
+  * driver-resident HEAD of the samples appended since: a series registry
+  * with one entry per distinct label set, the analog of the reference's
+  * `stripeSeries` of `memSeries` (ref: tsdb/head.go:2253, tsdb/head.go:2735).
+  * An entry holds its labels once and its samples as primitive columns —
+  * timestamps, values by their raw bits, a stale bit set, and start
+  * timestamps and native histograms only once the series has had one
+  * ([[SampleStore.Series]]). An append groups its batch by series, writes
+  * each series' new samples past its published length, and publishes the
+  * new registry in one volatile snapshot before it returns, so a write is
+  * acked only once a read taken after it sees the whole batch. A published
+  * sample is never rewritten, so a read takes the snapshot without the
+  * append lock.
+  *
+  * A read is the opened frame ∪ ONE relation over the snapshot: an RDD of
+  * its series with a fixed partition count. Each task receives its series'
+  * published prefixes, copied as the task is serialized, and decodes them
+  * into rows, so the head never enters the driver's optimizer as data.
+  * Its derived columns (`__sg`, `metric`, `block` — whichever the opened
+  * frame carries) come from the same Spark expressions as the block sink
+  * ([[graft.streaming.Ingest.sink]]). The read plan therefore has the same
+  * shape after one append or a thousand.
   *
   * The head is bounded the way the reference's is: once its samples span
   * more than 1.5 block ranges ([[graft.streaming.Ingest.blockMs]]), the
-  * append that crossed the limit moves the samples of every block older
-  * than the newest 1.5 ranges into the persisted part as one checkpointed
-  * (spillable) relation, and the head keeps the rest
+  * append that crossed the limit cuts every series at the start of the
+  * newest 1.5 ranges, moves the older samples into the persisted part as one
+  * checkpointed (spillable) relation, and keeps the rest
   * (ref: tsdb/head.go compactable, tsdb/db.go compactHead). That fold is the
   * only append of driver rows that runs a Spark job; the persisted part
   * grows by one relation per folded block.
+  *
+  * A store opened without `h` or `stt` marks them store-absent (see
+  * [[Engine.canonical]]), which lets the planner erase histogram and
+  * start-timestamp legs; the first appended histogram (non-zero start
+  * timestamp) drops that mark for good.
   *
   * Deletions are recorded as TOMBSTONES — (matchers, interval) pairs applied
   * as filters at read time, exactly the reference's model
@@ -43,28 +59,30 @@ import org.apache.spark.sql.functions._
   */
 final class SampleStore(spark: SparkSession, initial: DataFrame) {
 
-  import SampleStore.{State, Tombstone}
+  import SampleStore.{Head, Series, State, Tombstone}
 
-  @volatile private var state = State(Engine.canonical(initial), Vector.empty, Nil)
+  @volatile private var state = State(Engine.canonical(initial), Head.empty, Nil)
 
-  // head counters (ref: tsdb/head.go headMetrics samplesAppended / series),
-  // kept while appending — /metrics reads them without a job or a scan
+  // label set → index of its series in the head; the appender's, under the lock
+  private val seriesIds = mutable.HashMap.empty[scala.collection.Map[String, String], Int]
+
+  // head counters (ref: tsdb/head.go headMetrics samplesAppended), kept while
+  // appending — /metrics reads them without a job or a scan
   @volatile private var floatsAppended = 0L
   @volatile private var histogramsAppended = 0L
-  private val headSeriesSet = scala.collection.mutable.HashSet.empty[scala.collection.Map[String, String]]
-  @volatile private var headSeriesCount = 0
-  // time range of the head's samples, for the fold check
-  private var headMinT = Long.MaxValue
-  private var headMaxT = Long.MinValue
 
   /** samples appended to the head since the store opened: (float, histogram) */
   def samplesAppended: (Long, Long) = (floatsAppended, histogramsAppended)
 
-  /** distinct series among the samples held in the head */
-  def headSeries: Int = headSeriesCount
+  /** distinct series held in the head */
+  def headSeries: Int = state.head.series.size
+
+  /** least and greatest timestamp held in the head; (Long.MaxValue,
+    * Long.MinValue) while it is empty, as the reference's head reports */
+  def headTimeRange: (Long, Long) = { val h = state.head; (h.minT, h.maxT) }
 
   /** samples held in the head */
-  private[graft] def headSamples: Int = state.head.size
+  private[graft] def headSamples: Int = state.head.series.iterator.map(_.n).sum
 
   private def matcherCond(m: LabelMatcher): org.apache.spark.sql.Column = {
     val c = coalesce(element_at(col("labels"), m.name), lit(""))
@@ -76,11 +94,11 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     }
   }
 
-  /** head rows as a frame with the base's derived columns */
-  private def headFrame(head: Vector[Row], baseCols: Array[String]): DataFrame = {
+  /** series' samples as a frame with the base's derived columns */
+  private def headFrame(series: Seq[Series], baseCols: Array[String]): DataFrame = {
     val sc = spark.sparkContext
-    var h = Engine.canonical(
-      spark.createDataFrame(sc.parallelize(head, sc.defaultParallelism), Engine.samplesSchema))
+    var h = Engine.canonical(spark.createDataFrame(
+      sc.parallelize(series, sc.defaultParallelism).flatMap(Series.rows), Engine.samplesSchema))
     if (baseCols.contains("__sg")) h = Engine.withSeriesSig(h)
     if (baseCols.contains("metric")) h = h.withColumn("metric", Ingest.metricCol)
     if (baseCols.contains("block")) h = h.withColumn("block", Ingest.blockCol())
@@ -91,8 +109,8 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   def samples: DataFrame = {
     val s = state
     val all =
-      if (s.head.isEmpty) s.base
-      else s.base.unionByName(headFrame(s.head, s.base.columns), allowMissingColumns = true)
+      if (s.head.series.isEmpty) s.base
+      else s.base.unionByName(headFrame(s.head.series, s.base.columns), allowMissingColumns = true)
     s.tombs.foldLeft(all) { (df, ts) =>
       val hit = ts.matchers.map(matcherCond).reduce(_ && _) &&
         col("t") >= ts.minT && col("t") <= ts.maxT
@@ -105,42 +123,65 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
     * report series, stale markers. Runs no Spark job unless the head has
     * outgrown its range and folds. */
   def append(rows: Seq[Row]): Unit = if (rows.nonEmpty) synchronized {
+    val s = state
+    var series = s.head.series
+    // series first seen in this batch; indexed only once it is published, so
+    // a batch that fails part-way leaves no index entry past the head
+    val fresh = mutable.HashMap.empty[scala.collection.Map[String, String], Int]
+    val touched = mutable.HashMap.empty[Int, Series.Appender]
+    var minT = s.head.minT
+    var maxT = s.head.maxT
     var hists = 0
+    var stts = false
+    // a decoded request gives all samples of a series one labels object
+    var lastLabels: AnyRef = null
+    var appender: Series.Appender = null
     rows.foreach { r =>
+      val labels = r.getMap[String, String](0)
+      if (!(labels eq lastLabels)) {
+        val id = seriesIds.getOrElse(labels,
+          fresh.getOrElseUpdate(labels, { series :+= Series.empty(labels); series.size - 1 }))
+        appender = touched.getOrElseUpdate(id, new Series.Appender(series(id)))
+        lastLabels = labels
+      }
       val t = r.getLong(1)
-      if (t < headMinT) headMinT = t
-      if (t > headMaxT) headMaxT = t
-      if (!r.isNullAt(4)) hists += 1
-      if (headSeriesSet.add(r.getMap[String, String](0))) headSeriesCount += 1
+      val hist = if (r.isNullAt(4)) null else r.getStruct(4)
+      val st = if (r.isNullAt(5)) 0L else r.getLong(5)
+      appender.add(t, java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+        !r.isNullAt(3) && r.getBoolean(3), hist, st)
+      if (t < minT) minT = t
+      if (t > maxT) maxT = t
+      if (hist != null) hists += 1
+      if (st != 0L) stts = true
     }
+    touched.foreach { case (id, a) => series = series.updated(id, a.result) }
+    var base = s.base
+    if (hists > 0) base = SampleStore.present(base, "h")
+    if (stts) base = SampleStore.present(base, "stt")
+    val next = State(base, Head(series, minT, maxT), s.tombs)
+    state = if (maxT - minT > Ingest.blockMs / 2 * 3) fold(next) else { seriesIds ++= fresh; next }
     histogramsAppended += hists
     floatsAppended += rows.size - hists
-    val s = state.copy(head = state.head ++ rows)
-    state = if (headMaxT - headMinT > Ingest.blockMs / 2 * 3) fold(s) else s
   }
 
-  /** move the head's samples older than its newest 1.5 block ranges into
-    * the persisted part (ref: tsdb/head.go compactable) */
+  /** cut every series at the start of the head's newest 1.5 block ranges and
+    * move the older samples into the persisted part (ref: tsdb/head.go
+    * compactable) */
   private def fold(s: State): State = {
     val width = Ingest.blockMs
-    val cut = Math.floorDiv(headMaxT - width / 2 * 3, width) * width + width
-    val (old, kept) = s.head.partition(_.getLong(1) < cut)
+    val cut = Math.floorDiv(s.head.maxT - width / 2 * 3, width) * width + width
+    val old = s.head.series.map(_.filter(_ < cut)).filter(_.n > 0)
     val persisted = headFrame(old, s.base.columns).localCheckpoint(true)
-    resetHead(kept)
-    s.copy(base = s.base.unionByName(persisted, allowMissingColumns = true), head = kept)
+    s.copy(base = s.base.unionByName(persisted, allowMissingColumns = true),
+      head = resetHead(s.head.series.map(_.filter(_ >= cut)).filter(_.n > 0)))
   }
 
-  /** head bookkeeping for a head that now holds exactly `rows` */
-  private def resetHead(rows: Vector[Row]): Unit = {
-    headSeriesSet.clear()
-    headMinT = Long.MaxValue
-    headMaxT = Long.MinValue
-    rows.foreach { r =>
-      headSeriesSet += r.getMap[String, String](0)
-      headMinT = math.min(headMinT, r.getLong(1))
-      headMaxT = math.max(headMaxT, r.getLong(1))
-    }
-    headSeriesCount = headSeriesSet.size
+  /** the head holding exactly `series`, and the label index that goes with it */
+  private def resetHead(series: Vector[Series]): Head = {
+    seriesIds.clear()
+    series.iterator.zipWithIndex.foreach { case (x, i) => seriesIds(x.labels) = i }
+    Head(series, series.iterator.map(_.minT).foldLeft(Long.MaxValue)(math.min),
+      series.iterator.map(_.maxT).foldLeft(Long.MinValue)(math.max))
   }
 
   /** append a frame in canonical schema (e.g. a relabeled scrape, a rule
@@ -262,8 +303,7 @@ final class SampleStore(spark: SparkSession, initial: DataFrame) {
   /** /api/v1/admin/tsdb/clean_tombstones — materialize deletions; the head
     * folds into the materialized part */
   def cleanTombstones(): Unit = synchronized {
-    state = State(samples.localCheckpoint(true), Vector.empty, Nil)
-    resetHead(Vector.empty)
+    state = State(samples.localCheckpoint(true), resetHead(Vector.empty), Nil)
   }
 
   /** /api/v1/admin/tsdb/snapshot — persist the current (tombstone-applied)
@@ -280,11 +320,111 @@ object SampleStore {
 
   private final case class Tombstone(matchers: List[LabelMatcher], minT: Long, maxT: Long)
 
+  /** the head as published: one [[Series]] per distinct label set, and the
+    * least and greatest timestamp they hold */
+  private final case class Head(series: Vector[Series], minT: Long, maxT: Long)
+  private object Head { val empty: Head = Head(Vector.empty, Long.MaxValue, Long.MinValue) }
+
   /** one published version of the store; a read takes it whole */
-  private final case class State(base: DataFrame, head: Vector[Row], tombs: List[Tombstone])
+  private final case class State(base: DataFrame, head: Head, tombs: List[Tombstone])
+
+  /** One head series: its labels, held once, and its first `n` samples as
+    * columns (ref: tsdb/head.go:2735 memSeries). The arrays may be longer
+    * than `n`: the next version of the series shares them and writes only
+    * past `n`, so a published version never changes. `stt` and `h` are null
+    * until the series gets a non-zero start timestamp or a native histogram;
+    * a null `stt` reads as 0, as [[Engine.canonical]] reads a null one. */
+  private final class Series private (
+      val labels: scala.collection.Map[String, String],
+      val n: Int,
+      private val t: Array[Long],
+      private val v: Array[Long], // raw bits of the doubles
+      private val stale: Array[Long], // bit i set ⇔ sample i is a stale marker
+      private val stt: Array[Long],
+      private val h: Array[Row]) extends Serializable {
+
+    private def isStale(i: Int): Boolean = (stale(i >>> 6) & (1L << i)) != 0L
+
+    def minT: Long = { var m = Long.MaxValue; var i = 0; while (i < n) { m = math.min(m, t(i)); i += 1 }; m }
+    def maxT: Long = { var m = Long.MinValue; var i = 0; while (i < n) { m = math.max(m, t(i)); i += 1 }; m }
+
+    /** a task receives this version with its arrays cut to `n`: the
+      * copy is made as the task is serialized and is not kept */
+    private def writeReplace(): AnyRef =
+      if (t.length == n) this
+      else new Series(labels, n, java.util.Arrays.copyOf(t, n), java.util.Arrays.copyOf(v, n),
+        java.util.Arrays.copyOf(stale, (n + 63) >>> 6),
+        if (stt == null) null else java.util.Arrays.copyOf(stt, n),
+        if (h == null) null else java.util.Arrays.copyOf(h, n))
+
+    /** the samples whose timestamp satisfies `keep`, in new arrays */
+    def filter(keep: Long => Boolean): Series = {
+      val a = new Series.Appender(Series.empty(labels))
+      var i = 0
+      while (i < n) { if (keep(t(i))) a.add(t(i), v(i), isStale(i), if (h == null) null else h(i),
+        if (stt == null) 0L else stt(i)); i += 1 }
+      a.result
+    }
+  }
+
+  private object Series {
+    private val none = Array.empty[Long]
+
+    def empty(labels: scala.collection.Map[String, String]): Series =
+      new Series(labels, 0, none, none, none, null, null)
+
+    /** a series' samples as rows in [[Engine.samplesSchema]] order */
+    def rows(s: Series): Iterator[Row] = Iterator.range(0, s.n).map { i =>
+      Row(s.labels, s.t(i), java.lang.Double.longBitsToDouble(s.v(i)), s.isStale(i),
+        if (s.h == null) null else s.h(i), if (s.stt == null) 0L else s.stt(i))
+    }
+
+    /** The columns of `from` being appended to: written in place past `n`
+      * while they have room, copied into arrays half as large again once
+      * they do not. Every column of a slot is written, so a slot left over
+      * by an append that failed before it was published reads as new. */
+    final class Appender(from: Series) {
+      private var n = from.n
+      private var t = from.t
+      private var v = from.v
+      private var stale = from.stale
+      private var stt = from.stt
+      private var h = from.h
+
+      private def grow(): Unit = {
+        val cap = math.max(8, t.length + t.length / 2)
+        t = java.util.Arrays.copyOf(t, cap)
+        v = java.util.Arrays.copyOf(v, cap)
+        stale = java.util.Arrays.copyOf(stale, (cap + 63) >>> 6)
+        if (stt != null) stt = java.util.Arrays.copyOf(stt, cap)
+        if (h != null) h = java.util.Arrays.copyOf(h, cap)
+      }
+
+      def add(ts: Long, bits: Long, isStale: Boolean, hist: Row, st: Long): Unit = {
+        if (n == t.length) grow()
+        t(n) = ts
+        v(n) = bits
+        val w = n >>> 6
+        stale(w) = if (isStale) stale(w) | (1L << n) else stale(w) & ~(1L << n)
+        if (hist != null && h == null) h = new Array[Row](t.length)
+        if (h != null) h(n) = hist
+        if (st != 0L && stt == null) stt = new Array[Long](t.length)
+        if (stt != null) stt(n) = st
+        n += 1
+      }
+
+      def result: Series = new Series(from.labels, n, t, v, stale, stt, h)
+    }
+  }
+
+  /** `df` with column `c` no longer marked store-absent: the store now holds
+    * a histogram (start timestamp), so the planner must not fold it away */
+  private def present(df: DataFrame, c: String): DataFrame =
+    if (df.schema(c).metadata.contains(Engine.storeAbsentKey)) df.withMetadata(c, Metadata.empty)
+    else df
 
   /** a frame's samples as rows in [[Engine.samplesSchema]] order (one Spark
-    * job) — the form [[SampleStore.append]] holds */
+    * job) — the form [[SampleStore.append]] takes */
   def rows(batch: DataFrame): Seq[Row] = {
     val b = Engine.canonical(batch)
     b.select(col("labels"), col("t").cast("long"), col("v").cast("double"),

@@ -1220,4 +1220,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = TextAnalysis.repetitionStats(d).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
   }
+
+  test("array UDFs: cosine is the left-to-right double fold; a null element fails as before") {
+    val a = Seq(0.25f, -1.5f, 3.0f, 1e-3f)
+    val b = Seq(2.0f, 0.5f, -0.75f, 8.0f)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(a, b), Row(Seq[Any](1.0f, null, 2.0f), Seq(1.0f, 1.0f, 1.0f))), 1),
+      StructType(Seq(StructField("a", ArrayType(FloatType)), StructField("b", ArrayType(FloatType)))))
+    var dd = 0.0; var dq = 0.0; var dn = 0.0
+    a.indices.foreach { i => val x = a(i).toDouble; val y = b(i).toDouble; dd += x * y; dq += x * x; dn += y * y }
+    val want = dd / (math.sqrt(dq) * math.sqrt(dn))
+    val got = df.limit(1).select(Similarity.cosine("a", "b")).head().getDouble(0)
+    assert(java.lang.Double.doubleToRawLongBits(got) == java.lang.Double.doubleToRawLongBits(want))
+    // a float vector with a null element is rejected by Spark's input
+    // conversion, a word list with one fails in the n-gram loop
+    val e1 = intercept[Exception](df.select(Similarity.cosine("a", "b")).collect())
+    assert(e1.getMessage.contains("NOT_NULL_ASSERT_VIOLATION"), e1.getMessage)
+    val words = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(Seq("a", null, "b"))), 1),
+      StructType(Seq(StructField("w", ArrayType(StringType)))))
+    val e2 = intercept[Exception](words.select(CorpusStats.gramUdf(2)(col("w"))).collect())
+    assert(Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[NullPointerException]), e2.toString)
+  }
 }

@@ -45,12 +45,13 @@ class SampleStoreSpec extends AnyFunSuite {
   }
 
   /** the store as it was before the head: every batch unioned onto the
-    * opened frame, its derived columns aligned to the frame's */
+    * opened frame as a local relation, its derived columns aligned to the
+    * frame's */
   private final class UnionStore(initial: DataFrame) {
     private var base = Engine.canonical(initial)
     private var tombs = List.empty[(LabelMatcher, Long, Long)]
-    def append(batch: DataFrame): Unit = {
-      var b = Engine.canonical(batch)
+    def append(rows: Seq[Row]): Unit = {
+      var b = Engine.canonical(local(rows))
       if (base.columns.contains("__sg")) b = Engine.withSeriesSig(b)
       if (base.columns.contains("metric")) b = b.withColumn("metric", Ingest.metricCol)
       if (base.columns.contains("block")) b = b.withColumn("block", Ingest.blockCol())
@@ -65,12 +66,14 @@ class SampleStoreSpec extends AnyFunSuite {
     def cleanTombstones(): Unit = { base = samples.localCheckpoint(true); tombs = Nil }
   }
 
-  /** every row of a frame as a sortable string, labels in key order */
+  /** every row of a frame as a sortable string, labels in key order and
+    * doubles by their raw bits (NaN payloads and -0.0 stay distinct) */
   private def rowsOf(df: DataFrame): Seq[String] = df.collect().toSeq.map { r =>
     df.columns.indices.map { i =>
       df.columns(i) + "=" + (r.get(i) match {
         case m: scala.collection.Map[_, _] =>
           m.toSeq.map { case (k, v) => s"$k:$v" }.sorted.mkString("{", ",", "}")
+        case d: java.lang.Double => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
         case other => String.valueOf(other)
       })
     }.sorted.mkString(" ")
@@ -92,8 +95,33 @@ class SampleStoreSpec extends AnyFunSuite {
        else Nil)
   }
 
+  private val edgeLabels = Map("__name__" -> "edge", "job" -> "e")
+
+  /** one series' awkward samples around `t0`: out-of-order and duplicate
+    * timestamps, StaleNaN and another NaN payload, ±Inf, -0.0, null and
+    * zero start timestamps, and a histogram among floats */
+  private def edgeBatch(t0: Long): Seq[Row] = {
+    def row(t: Long, v: Double, stale: Boolean = false, h: Row = null, stt: Any = 0L) =
+      Row(edgeLabels, t, v, stale, h, stt)
+    Seq(
+      row(t0, 1.0, stt = null),
+      row(t0 - 30000L, 2.0),
+      row(t0, 3.0),
+      row(t0 + 1000L, java.lang.Double.longBitsToDouble(RemoteWrite.StaleNaNBits), stale = true),
+      row(t0 + 2000L, java.lang.Double.longBitsToDouble(0x7ff8000000000abcL)),
+      row(t0 + 3000L, Double.PositiveInfinity, stt = t0 - 60000L),
+      row(t0 + 4000L, Double.NegativeInfinity, stt = null),
+      row(t0 + 5000L, -0.0),
+      row(t0 + 6000L, Double.NaN, h = hist(7)))
+  }
+
   private def frame(rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Engine.samplesSchema)
+
+  /** rows as a local relation: unlike [[frame]], whose rows reach their
+    * tasks through Java serialization (which writes every NaN as the
+    * canonical one), it keeps each double's bits */
+  private def local(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, Engine.samplesSchema)
 
   private val initialRows = (0 until 5).flatMap(i => Seq(
     Row(Map("__name__" -> "up", "job" -> "a"), 3600000L + i * 60000L, 1.0),
@@ -108,13 +136,16 @@ class SampleStoreSpec extends AnyFunSuite {
     (0 until 6).foreach { k =>
       // rows and the frame adapter write the same head
       if (k % 2 == 0) store.append(batch(k)) else store.append(frame(batch(k)))
-      ref.append(frame(batch(k)))
+      ref.append(batch(k))
     }
     same("after appends")
+    store.append(edgeBatch(7260000L)); ref.append(edgeBatch(7260000L))
+    store.append(local(edgeBatch(7290000L))); ref.append(edgeBatch(7290000L))
+    same("edge samples")
     assert(store.samples.columns.toSeq == ref.samples.columns.toSeq)
     // an appended sample with a null start timestamp reads as 0, as canonical does
     val nullStt = Seq(Row(Map("__name__" -> "up", "job" -> "n"), 7300000L, 1.0, false, null, null))
-    store.append(nullStt); ref.append(frame(nullStt))
+    store.append(nullStt); ref.append(nullStt)
     same("null stt")
 
     val m = LabelMatcher("job", MatchOp.Eq, "a")
@@ -123,31 +154,74 @@ class SampleStoreSpec extends AnyFunSuite {
     same("after delete_series")
     store.cleanTombstones(); ref.cleanTombstones()
     same("after clean_tombstones")
-    (6 until 9).foreach { k => store.append(batch(k)); ref.append(frame(batch(k))) }
+    (6 until 9).foreach { k => store.append(batch(k)); ref.append(batch(k)) }
     same("appends after clean_tombstones")
 
     val dir = tmpDir("samplestore-snap")
     val name = store.snapshot(dir)
-    assert(rowsOf(spark.read.parquet(s"$dir/$name")) == rowsOf(ref.samples))
+    // parquet writes every NaN as the canonical one, so the reference is
+    // compared through parquet too
+    ref.samples.write.parquet(s"$dir/ref")
+    assert(rowsOf(spark.read.parquet(s"$dir/$name")) == rowsOf(spark.read.parquet(s"$dir/ref")))
+  }
+
+  test("edge samples in a series that straddles folds read as the union store's") {
+    val opened = blockStore(initialRows)
+    val store = new SampleStore(spark, opened)
+    val ref = new UnionStore(opened)
+    def both(rows: Seq[Row]): Unit = { store.append(rows); ref.append(rows) }
+    def same(step: String): Unit = assert(rowsOf(store.samples) == rowsOf(ref.samples), step)
+    // the edge series every 40 minutes over 8 h: the head may span 3 h, so
+    // it folds at 5h20m and again at 7h20m and 9h20m, cutting the series
+    (0 until 12).foreach(k => both(edgeBatch(7200000L + k * 2400000L)))
+    assert(store.headSamples < 12 * edgeBatch(0).size, "the head never folded")
+    assert(store.headSeries == 1)
+    same("after folds")
+    // a sample older than the last cut lands in the head, which folds it
+    both(Seq(Row(edgeLabels, 7260000L, 9.0, false, null, 0L)))
+    same("an old sample after the folds")
+    store.cleanTombstones(); ref.cleanTombstones()
+    assert(store.headSamples == 0 && store.headSeries == 0)
+    both(edgeBatch(36000000L))
+    same("appends after clean_tombstones")
   }
 
   test("a concurrent reader sees every batch whose append has returned") {
+    // and nothing of a batch whose append has not: each read is exactly a
+    // prefix of the batches
+    val batches = (0 until 40).map(k => batch(k) ++ edgeBatch(7200000L + k * 60000L + 500L))
+    val prefixes = (0 to batches.size).map(j =>
+      rowsOf(Engine.canonical(local(batches.take(j).flatten))) -> j).toMap
     val store = new SampleStore(spark, frame(Nil))
-    val returned = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val writer = new Thread(() => (0 until 60).foreach { k =>
-      store.append(batch(k)); returned.set(k); Thread.sleep(10)
+    val returned = new java.util.concurrent.atomic.AtomicInteger(0)
+    val writer = new Thread(() => batches.foreach { b =>
+      store.append(b); returned.incrementAndGet(); Thread.sleep(20)
     })
     writer.start()
     var reads = 0
     while (writer.isAlive || reads < 3) {
-      val k = returned.get()
-      val seen = store.samples.filter(col("labels")("job") === "a" && col("h").isNull)
-        .select(col("t")).collect().map(_.getLong(0)).toSet
-      assert((0 to k).forall(i => seen.contains(7200000L + i * 60000L)),
-        s"read after append $k misses a returned batch")
+      val done = returned.get()
+      val seen = prefixes.get(rowsOf(store.samples))
+      assert(seen.exists(_ >= done), s"a read after $done appends saw prefix $seen")
       reads += 1
     }
     writer.join()
+  }
+
+  test("an append that fails part-way leaves the store as it was") {
+    val store = new SampleStore(spark, frame(Nil))
+    store.append(batch(0))
+    val before = rowsOf(store.samples)
+    val fresh = Map("__name__" -> "fresh", "job" -> "f")
+    intercept[Exception](store.append(Seq(
+      Row(fresh, 7300000L, 1.0, false, null, 0L),
+      Row(Map("__name__" -> "up", "job" -> "a"), null, 2.0, false, null, 0L))))
+    assert(rowsOf(store.samples) == before)
+    assert(store.headSeries == batch(0).size && store.samplesAppended == ((2L, 1L)))
+    store.append(Seq(Row(fresh, 7300000L, 3.0, false, null, 0L)))
+    assert(store.samples.filter(col("labels")("__name__") === "fresh").select("v").collect()
+      .map(_.getDouble(0)).toSeq == Seq(3.0))
+    assert(store.headSeries == batch(0).size + 1)
   }
 
   test("the read plan has the same size after 1 append and after 200") {
@@ -174,7 +248,7 @@ class SampleStoreSpec extends AnyFunSuite {
     val heldBatches = Seq(1, 2, 3, 4, 5, 6, 7, 4, 5, 6, 7, 4)
     (0 until 12).foreach { k =>
       val b = batch(0).map(r => Row(r(0), 7200000L + k * 1800000L, r(2), r(3), r(4), r(5)))
-      store.append(b); ref.append(frame(b))
+      store.append(b); ref.append(b)
       assert(store.headSamples == heldBatches(k) * b.size, s"head after batch $k")
     }
     assert(rowsOf(store.samples) == rowsOf(ref.samples))

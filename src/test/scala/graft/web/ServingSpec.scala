@@ -1993,4 +1993,81 @@ class ServingSpec extends AnyFunSuite {
       assert(b.contains("prometheus_tsdb_head_series 3\n"), b)
     } finally api.stop()
   }
+
+  private def remoteWrite(port: Int, samples: Seq[RemoteWrite.Sample], v2: Boolean): Unit = {
+    val resp = client.send(
+      java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:$port/api/v1/write"))
+        .header("Content-Encoding", "snappy")
+        .header("Content-Type",
+          if (v2) "application/x-protobuf;proto=io.prometheus.write.v2.Request"
+          else "application/x-protobuf")
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(
+          if (v2) RemoteWrite.encodeV2(samples) else RemoteWrite.encodeV1(samples))).build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    assert(resp.statusCode() == 204, resp.body())
+  }
+
+  test("a remote-written StaleNaN ends its series, over PRW 1.0 and 2.0") {
+    val api = new HttpApi(spark, emptyStore(), 0, () => 2030000L)
+    api.start()
+    try {
+      val staleNaN = java.lang.Double.longBitsToDouble(RemoteWrite.StaleNaNBits)
+      Seq(false -> "m1", true -> "m2").foreach { case (v2, name) =>
+        val labels = Map("__name__" -> name)
+        remoteWrite(api.boundPort, Seq(
+          RemoteWrite.Sample(labels, 2000000L, 1.0), RemoteWrite.Sample(labels, 2015000L, staleNaN)), v2)
+        // ref: the instant selector ends at the marker, and range functions
+        // skip it (promql/engine.go value.IsStaleNaN)
+        val (c, b) = get(api.boundPort, s"/api/v1/query?query=$name&time=2030")
+        assert(c == 200 && b.contains("\"result\":[]"), b)
+        val (c2, b2) = get(api.boundPort, s"/api/v1/query?query=count_over_time($name%5B1m%5D)&time=2030")
+        assert(c2 == 200 && b2.contains("[2030,\"1\"]"), b2)
+      }
+    } finally api.stop()
+  }
+
+  test("a histogram or start timestamp written into a float-only store reaches the planner") {
+    // opened without h and stt, which the planner reads as store-absent
+    val opened = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(Map("__name__" -> "f"), 1000L, 1.0)), 1),
+      org.apache.spark.sql.types.StructType(Engine.samplesSchema.fields.take(3)))
+    val api = new HttpApi(spark, new SampleStore(spark, opened), 0, () => 60000L)
+    api.start()
+    try {
+      val (_, f) = get(api.boundPort, "/api/v1/query?query=f&time=60")
+      assert(f.contains("[60,\"1\"]"), f)
+      val h = graft.promql.FHist(0, 0.0, 1.0, 3.0, 1.5, Seq(0), Seq(2.0), Nil, Nil, Nil, 0)
+      remoteWrite(api.boundPort,
+        Seq(RemoteWrite.Sample(Map("__name__" -> "hh"), 50000L, 0.0, h = Some(h))), v2 = true)
+      val (c, b) = get(api.boundPort, "/api/v1/query?query=histogram_count(hh)&time=60")
+      assert(c == 200 && b.contains("[60,\"3\"]"), b)
+      remoteWrite(api.boundPort,
+        Seq(RemoteWrite.Sample(Map("__name__" -> "c_total"), 50000L, 5.0, stt = 20000L)), v2 = true)
+      val (c2, b2) = get(api.boundPort, "/api/v1/query?query=start_timestamp(c_total)&time=60")
+      assert(c2 == 200 && b2.contains("[60,\"20\"]"), b2)
+    } finally api.stop()
+  }
+
+  test("/metrics reports the head's time bounds") {
+    val api = new HttpApi(spark, emptyStore(), 0, () => 100000L)
+    api.start()
+    try {
+      // an empty head reports the reference's sentinels (math.MaxInt64/MinInt64)
+      val (_, empty) = get(api.boundPort, "/metrics")
+      assert(empty.contains("# TYPE prometheus_tsdb_head_min_time gauge\n"), empty)
+      assert(empty.contains(
+        s"prometheus_tsdb_head_min_time ${Json.goFloat(Long.MaxValue.toDouble)}\n"), empty)
+      assert(empty.contains(
+        s"prometheus_tsdb_head_max_time ${Json.goFloat(Long.MinValue.toDouble)}\n"), empty)
+      remoteWrite(api.boundPort, Seq(
+        RemoteWrite.Sample(Map("__name__" -> "a"), 3000L, 1.0),
+        RemoteWrite.Sample(Map("__name__" -> "a"), 1000L, 1.0),
+        RemoteWrite.Sample(Map("__name__" -> "b"), 7000L, 1.0)), v2 = false)
+      val (c, b) = get(api.boundPort, "/metrics")
+      assert(c == 200)
+      assert(b.contains("prometheus_tsdb_head_min_time 1000\n"), b)
+      assert(b.contains("prometheus_tsdb_head_max_time 7000\n"), b)
+    } finally api.stop()
+  }
 }
